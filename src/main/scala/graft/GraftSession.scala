@@ -55,12 +55,4 @@ object GraftSession {
       // DuckDB's nanos→micros cast).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // Ad-hoc experiment overrides: SPARK_GRAFT_CONF="k=v;k=v".
-      .config(sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";")
-        .filter(_.contains("=")).map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap)
-
-  def local(): SparkSession = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    builder(cores).getOrCreate()
-  }
 }

@@ -118,7 +118,6 @@ object Components {
           .select(col("dst").as("id"), col("component"), lit(null).cast("long").as("self"))
         // Each id appears exactly once in `self`, so min("self") (nulls
         // ignored) recovers the round-start label alongside the new min.
-        val t0 = System.nanoTime()
         val hopped = self.union(prop)
           .groupBy("id").agg(min("component").as("component"), min("self").as("prev"))
         // POINTER JUMP (label doubling): follow each row's label to that
@@ -144,8 +143,6 @@ object Components {
                 lit(0L)).as("changed")),
           s"gen_$i")
         val changed = obs.get("changed").asInstanceOf[Long]
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(f"[cc] round $i: ${(System.nanoTime() - t0) / 1e9}%.2fs changed=$changed")
         if (i > 0) drop(s"gen_${i - 1}")
         labels = next
         converged = changed == 0L

@@ -170,8 +170,9 @@ object AnalyticsQueries {
 
   /** [[anBasketPairsTopk]] body with the MG capacity as a parameter —
     * the query key always runs [[BasketTopkK]] (the oracle bakes that
-    * threshold in); `graft.TopkProbe` runs small K against a measured
-    * Zipf support law to earn the K ≪ 2²⁰ story (VERDICT r11 #1). */
+    * threshold in); small K against a measured Zipf support law earned
+    * the K ≪ 2²⁰ story (VERDICT r11 #1) — PERF.md "Round 12: Zipf skew in
+    * the RELATIONAL corpus" has the K-ladder table. */
   private[graft] def basketPairsTopkWith(s: SparkSession, dir: String,
       k: Int): DataFrame = basketTopkCore(s, dir, k)._1
 
@@ -302,7 +303,8 @@ object AnalyticsQueries {
     * So the auto key shares `an_basket_pairs_topk`'s oracle SQL verbatim
     * and is hash-graded against it. BasketAutoKSpec pins the one-pass
     * accept, both clamp edges, and the probe-underestimate overshoot;
-    * TopkProbe's `topk_auto` row measures it on the skew ladder.
+    * PERF.md "Round 14: basket top-k auto-K" measures it on the skew
+    * ladder.
     *
     * Flat-corpus toll (VERDICT r14 nit #1): the escalation pass threads
     * the probe's PERSISTED distinct order×part stream and checkpointed

@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   * session is not pinned by the cache and collects normally, while a dir
   * regenerated with different data is re-probed by any new session
   * instead of being served a stale mass. Callers key by `"<probe>#<dir>"`
-  * so distinct probes over the same dir don't collide.
+  * (`"count#<dir>#<table>"` for row counts) so distinct probes over the
+  * same dir don't collide.
   */
 private[graft] object ProbeCache {
   private val cache =
@@ -42,4 +43,9 @@ private[graft] object ProbeCache {
     * session itself is unreachable. */
   private[graft] def peek(s: SparkSession, key: String): Option[Long] =
     cache.synchronized(Option(cache.get(s))).flatMap(_.get(key))
+
+  /** Test seam: forgets the memo for (session, key), so the next call
+    * probes again. */
+  private[graft] def evict(s: SparkSession, key: String): Unit =
+    cache.synchronized(Option(cache.get(s))).foreach(_.remove(key))
 }

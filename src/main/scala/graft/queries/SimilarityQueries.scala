@@ -112,27 +112,13 @@ object SimilarityQueries {
     (LshBitsMin to LshBitsMax)
       .find(b => (1L << b) * LshTargetBucket >= n).getOrElse(LshBitsMax)
 
-  // one count() per (session, dir) per JVM — the probe is parquet-metadata
+  // one count() per (session, dir, table) — the probe is parquet-metadata
   // cheap, but Verify fans 10 similarity queries over the same dir
-  // concurrently. WEAK session keys (ADVICE r5): a stopped session is not
-  // pinned by the cache and collects normally, while a dir regenerated
-  // with different row counts is re-probed by any new session instead of
-  // being served a stale corpus size. (The DataFrame-valued fixture
-  // caches can't get this treatment — their values reference the session
-  // regardless — and stay documented as bench-harness caches.)
-  private val countCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, Long]]
-  private def cachedCount(s: SparkSession, dir: String, table: String): Long = {
-    val perSession = countCache.synchronized {
-      var m = countCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, Long]
-        countCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(s"$dir#$table", Tables(s, dir, table).count())
-  }
+  // concurrently. (The DataFrame-valued fixture caches can't ride
+  // [[ProbeCache]]'s weak session keys — their values reference the
+  // session regardless — and stay documented as bench-harness caches.)
+  private def cachedCount(s: SparkSession, dir: String, table: String): Long =
+    ProbeCache.cached(s, s"count#$dir#$table")(Tables(s, dir, table).count())
   private def corpusCount(s: SparkSession, dir: String): Long =
     cachedCount(s, dir, "embeddings")
   private def docCount(s: SparkSession, dir: String): Long =
@@ -219,19 +205,11 @@ object SimilarityQueries {
   private val DefaultMaxExactPairsPerDoc = 1024L
   private[graft] def maxExactPairsPerDoc(s: SparkSession): Long =
     envelope(s, "graft.maxExactPairsPerDoc", DefaultMaxExactPairsPerDoc)
-  private val pairWorkCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, (Long, Long)]]
-  /** (docs, Σ per-shingle-bucket candidate pairs) for the exact index. */
+  /** (docs, Σ per-shingle-bucket candidate pairs) for the exact index —
+    * one lazy shingle pass fills both memo keys, as in
+    * [[minhashBandStats]]. */
   private[graft] def exactIndexStats(s: SparkSession, dir: String): (Long, Long) = {
-    val perSession = pairWorkCache.synchronized {
-      var m = pairWorkCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-        pairWorkCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
+    lazy val computed: (Long, Long) = {
       val shd = shingled(s, dir)
       val docs = shd.count()
       val pairWork = shd.select(explode(col("sh")).as("shingle"))
@@ -239,7 +217,9 @@ object SimilarityQueries {
         .agg(coalesce(sum(col("c") * (col("c") - 1) / 2), lit(0.0)).cast("long"))
         .head().getLong(0)
       (docs, pairWork)
-    })
+    }
+    (ProbeCache.cached(s, s"exactIndexDocs#$dir")(computed._1),
+      ProbeCache.cached(s, s"exactIndexPairWork#$dir")(computed._2))
   }
   private def fenceExactIndex(name: String, s: SparkSession, dir: String): Unit = {
     val budget = maxExactPairsPerDoc(s)
@@ -274,28 +254,16 @@ object SimilarityQueries {
   private val DefaultMaxSimhashPairsPerDoc = 512L
   private[graft] def maxSimhashPairsPerDoc(s: SparkSession): Long =
     envelope(s, "graft.maxSimhashPairsPerDoc", DefaultMaxSimhashPairsPerDoc)
-  private val simhashWorkCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, (Long, Long)]]
-  /** (docs, Σ per-band-bucket candidate pairs) for the simhash band join. */
-  private[graft] def simhashIndexStats(s: SparkSession, dir: String): (Long, Long) = {
-    val perSession = simhashWorkCache.synchronized {
-      var m = simhashWorkCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-        simhashWorkCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
-      val banded = simhashBanded(s, dir)
-      val docs = docCount(s, dir)
-      val pairWork = banded
+  /** (docs, Σ per-band-bucket candidate pairs) for the simhash band join.
+    * Docs is the memoized `documents` count; the pair mass is one banding
+    * pass under its own memo key. */
+  private[graft] def simhashIndexStats(s: SparkSession, dir: String): (Long, Long) =
+    (docCount(s, dir), ProbeCache.cached(s, s"simhashPairWork#$dir") {
+      simhashBanded(s, dir)
         .groupBy(col("band_id"), col("band_val")).agg(count(lit(1)).as("c"))
         .agg(coalesce(sum(col("c") * (col("c") - 1) / 2), lit(0.0)).cast("long"))
         .head().getLong(0)
-      (docs, pairWork)
     })
-  }
   private def fenceSimhash(name: String, s: SparkSession, dir: String): Unit = {
     val budget = maxSimhashPairsPerDoc(s)
     val (docs, pairWork) = simhashIndexStats(s, dir)
@@ -840,9 +808,10 @@ object SimilarityQueries {
   // index and persists it ([[BatchState]]), batch 2 reads the LANDED
   // state back and probes it one-sidedly. The oracles read the same
   // landed files, so a state-WRITE bug — not just probe math — lands in
-  // the hash compare. Build/probe are separate seams so IncBatch (the
-  // index-size-freedom measurement) can time the probe alone at a FIXED
-  // batch size against indexes a decade apart.
+  // the hash compare. Build/probe are separate seams so the probe can be
+  // timed alone at a FIXED batch size against indexes a decade apart —
+  // the index-size-freedom measurement recorded in PERF.md ("Round 16:
+  // the incremental family graded under a TRUE appended-batch protocol").
 
   /** Batch-1: band index + hashed-shingle features of docs < `split`,
     * persisted. */

@@ -36,23 +36,60 @@ class ProbeCacheSpec extends SparkSpec {
     assert(ProbeCache.cached(fresh, "p3#dir")(sys.error("cached")) == 8L)
   }
 
+  /** Spark jobs `build` runs. The build runs under its own job group,
+    * then one sentinel job under another; the status store sees jobs in
+    * submission order, so once the sentinel is visible every job of the
+    * build is too. */
+  private def jobsDuring(group: String)(build: => Unit): Int = {
+    val sc = spark.sparkContext
+    try {
+      sc.setJobGroup(group, group)
+      build
+      sc.setJobGroup(s"$group/sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+    } finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group/sentinel").isEmpty) {
+      assert(System.nanoTime() < deadline, "sentinel job never reached the status store")
+      Thread.sleep(20)
+    }
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   test("the fence probes actually ride the cache (one scan per bench key)") {
-    // p_percentile / a_median / deconJoinWork / minhashBandWork all key by
-    // "<probe>#<dir>" — calling the query twice must not re-scan. The
-    // probes are private; observe through the public query path via the
-    // GC-stable peek seam (the r16 red gate: asserting on the WeakHashMap's
-    // GLOBAL occupancy fails when GC collects an earlier test's
-    // unreferenced session — `spark` here is strongly held by the suite,
-    // so ITS entry cannot disappear mid-test). After one build the probe
-    // key is memoized for this session; a second call through the cache
-    // with a throwing thunk must be served that memo, not re-scan.
-    val key = s"minhashBandWork#$sfDir"
-    graft.queries.SimilarityQueries.queries("dedup_minhash_lsh")(spark, sfDir)
-    val memo = ProbeCache.peek(spark, key)
-    assert(memo.nonEmpty, s"fence probe $key not memoized after the first build")
-    graft.queries.SimilarityQueries.queries("dedup_minhash_lsh")(spark, sfDir)
-    val served = ProbeCache.cached(spark, key)(
-      sys.error("probe must be served from the memo, not re-executed"))
-    assert(served == memo.get)
+    // Every fence probe keys by "<probe>#<dir>" (the corpus counts by
+    // "count#<dir>#<table>"). The probes are private; observe through the
+    // public query path via the GC-stable peek seam (the r16 red gate:
+    // asserting on the WeakHashMap's GLOBAL occupancy fails when GC
+    // collects an earlier test's unreferenced session — `spark` here is
+    // strongly held by the suite, so ITS entries cannot disappear
+    // mid-test). Per (query, probe key):
+    //  - after one build the key is memoized for this session;
+    //  - a build with that one memo evicted runs MORE Spark jobs than a
+    //    build with every memo warm — a probe that scans whether or not
+    //    it is memoized runs the same jobs both times;
+    //  - a call through the cache with a throwing thunk is served the memo.
+    val probes = Seq(
+      "dedup_minhash_lsh" -> s"minhashBandWork#$sfDir",
+      "dedup_minhash_lsh" -> s"count#$sfDir#documents",
+      "dedup_ngram_jaccard" -> s"exactIndexDocs#$sfDir",
+      "dedup_ngram_jaccard" -> s"exactIndexPairWork#$sfDir",
+      "dedup_simhash" -> s"simhashPairWork#$sfDir",
+      "dedup_simhash" -> s"count#$sfDir#documents",
+      "ann_cosine_topk" -> s"count#$sfDir#embeddings")
+    probes.foreach { case (query, key) =>
+      def build(): Unit = graft.queries.SimilarityQueries.queries(query)(spark, sfDir)
+      build()
+      val memo = ProbeCache.peek(spark, key)
+      assert(memo.nonEmpty, s"$query: fence probe $key not memoized after the first build")
+      val warm = jobsDuring(s"probe-cache $query $key warm")(build())
+      ProbeCache.evict(spark, key)
+      val cold = jobsDuring(s"probe-cache $query $key cold")(build())
+      assert(cold > warm, s"$query: probe $key ran $warm jobs with its memo warm " +
+        s"and $cold with it evicted — it re-scans whether or not it is memoized")
+      val served = ProbeCache.cached(spark, key)(
+        sys.error(s"$query: probe $key must be served from the memo, not re-executed"))
+      assert(served == memo.get)
+    }
   }
 }
